@@ -97,12 +97,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.artifacts import artifact_dir
 from real_time_data_warehouse_spark.functions.money import (
     dec_sum,
     oracle_dec_sum,
-)
-from real_time_data_warehouse_spark.operators.sink_readback import (
-    _artifact_dir,
 )
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
@@ -199,7 +197,7 @@ def _app_source(spark: SparkSession, sf_dir: str) -> str:
     derived from the FILE COUNT (a fixed offset silently mis-orders the
     sentinel once the slice count grows past it — the file source
     follows modification time, same discipline as
-    streaming_exec._write_time_sliced_source)."""
+    streaming_exec._write_slices)."""
 
     def build(base: str) -> None:
         src0 = _sliced_source(spark, sf_dir, _SRC_FILES)
@@ -249,7 +247,7 @@ def _app_source(spark: SparkSession, sf_dir: str) -> str:
                   now - 1)
         write_one(sentinel(2, _SENT_NS), "batch_z2_sentinel.parquet", now)
 
-    return _artifact_dir(spark, sf_dir, "appsrc", build)
+    return artifact_dir(spark, sf_dir, "appsrc", build)
 
 
 def _dump_progress(q, base: str) -> list[dict]:
@@ -312,7 +310,7 @@ def _chain_artifact(
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
             _run_append_chain(spark, base, plan(ev), n_ops)
 
-    return _artifact_dir(spark, sf_dir, kind, build)
+    return artifact_dir(spark, sf_dir, kind, build)
 
 
 def _typed_branch(
@@ -823,7 +821,7 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
             _run_crash_restart(spark, start, lambda: None)
 
-    return _artifact_dir(spark, sf_dir, "app4s", build)
+    return artifact_dir(spark, sf_dir, "app4s", build)
 
 
 @register(
@@ -957,7 +955,7 @@ def _app5_source(spark: SparkSession, sf_dir: str) -> str:
             "event_id % mod dirty rule — oracle and stream would diverge"
         )
 
-    return _artifact_dir(spark, sf_dir, "app5src", build)
+    return artifact_dir(spark, sf_dir, "app5src", build)
 
 
 _APP5_OUTPUT = None  # built lazily: pyspark.sql.types import kept local
@@ -1117,7 +1115,7 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
             # replayed epochs' plans
             _assert_state_operators(_dump_progress(q2, base), 1)
 
-    return _artifact_dir(spark, sf_dir, "app5s", build)
+    return artifact_dir(spark, sf_dir, "app5s", build)
 
 
 @register(
@@ -1547,7 +1545,7 @@ def _app7s_build(spark: SparkSession, sf_dir: str) -> str:
             # the keyed ST5 state + the update-mode aggregate state
             _assert_state_operators(_dump_progress(q, base), 2)
 
-    return _artifact_dir(spark, sf_dir, "app7s", build)
+    return artifact_dir(spark, sf_dir, "app7s", build)
 
 
 @register(
@@ -1606,7 +1604,7 @@ def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
             # update-mode aggregate
             _assert_state_operators(_dump_progress(q2, base), 2)
 
-    return _artifact_dir(spark, sf_dir, "app7x", build)
+    return artifact_dir(spark, sf_dir, "app7x", build)
 
 
 @register(
@@ -1880,7 +1878,7 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
             # full chain: 2 dedups + 1 symmetric hash join
             _assert_state_operators(_dump_progress(q2, base), 3)
 
-    return _artifact_dir(spark, sf_dir, "app9x", build)
+    return artifact_dir(spark, sf_dir, "app9x", build)
 
 
 @register(
@@ -2228,7 +2226,7 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
             q2 = _run_crash_restart(spark, start, plant_debris)
             _assert_state_operators(_dump_progress(q2, base), 1)
 
-    return _artifact_dir(spark, sf_dir, "app14s", build)
+    return artifact_dir(spark, sf_dir, "app14s", build)
 
 
 @register(

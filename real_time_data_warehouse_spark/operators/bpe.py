@@ -52,6 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from real_time_data_warehouse_spark.artifacts import artifact
 from real_time_data_warehouse_spark.functions.text import tokenize, tokenize_sql
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.tables import Tables
@@ -152,24 +153,16 @@ def train_merges(
     return merges
 
 
-# Trained-merge cache: ONE training run per (session, sf_dir) feeds both
-# t17 (the merge table) and t17b (corpus encoding) — the artifact-reuse
-# pattern of the IVF centroids. Values are plain tuples, never Spark
-# objects, so stale sessions cannot leak through it.
-_MERGE_CACHE: dict[tuple, list[tuple]] = {}
-_MERGE_CACHE_MAX = 8
-
-
 def trained_merges(
     spark: SparkSession, sf_dir: str, n_rounds: int = BPE_ROUNDS
 ) -> list[tuple]:
-    key = (spark.sparkContext.applicationId, sf_dir, n_rounds)
-    if key not in _MERGE_CACHE:
-        while len(_MERGE_CACHE) >= _MERGE_CACHE_MAX:
-            _MERGE_CACHE.pop(next(iter(_MERGE_CACHE)))
-        t = Tables(spark, sf_dir)
-        _MERGE_CACHE[key] = train_merges(t.documents, n_rounds)
-    return _MERGE_CACHE[key]
+    """ONE training run per (session, sf_dir) feeds both t17 (the merge
+    table) and t17b (corpus encoding) — a session artifact, like the
+    IVF centroids. Values are plain tuples, never Spark objects."""
+    return artifact(
+        spark, sf_dir, f"bpe{n_rounds}",
+        lambda: train_merges(Tables(spark, sf_dir).documents, n_rounds),
+    )
 
 
 def bpe_train_frame(

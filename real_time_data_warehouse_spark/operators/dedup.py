@@ -22,11 +22,10 @@ results.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.artifacts import artifact
 from real_time_data_warehouse_spark.functions.text import (
     POLY_P,
     md5_hash,
@@ -673,36 +672,6 @@ def min_label_propagation(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     return labels.select("node", "label")
 
 
-# Keyed by (applicationId, sf_dir) with the owning session held by
-# weakref in the value: newSession() shares an applicationId but must
-# not be handed another session's checkpointed frame, and a CPython
-# id() can be reused after GC, so identity is validated against the
-# live object on every hit instead of being baked into the key.
-# Bounded: oldest entry dropped past the cap — and its checkpoint
-# blocks unpersisted — so a long-lived driver iterating many sf_dirs
-# can't accumulate checkpoint storage without end.
-_D6_CACHE: dict[
-    tuple[str, str], tuple["weakref.ref[SparkSession]", DataFrame]
-] = {}
-_D6_CACHE_MAX = 4
-
-
-def _d6_cache_evict(key: tuple[str, str]) -> None:
-    """Drop a cache entry AND release its localCheckpoint blocks.
-
-    A checkpointed frame's analyzed plan IS a LogicalRDD holding the
-    persisted internal RDD — ``analyzed().rdd()`` is that RDD (NOT
-    ``toRdd()``, which wraps it in a fresh unpersisted MapPartitionsRDD
-    per call). Best effort — a stopped context just means the blocks
-    are already gone.
-    """
-    _ref, df = _D6_CACHE.pop(key)
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 @register(
     "d6_dedup_clusters",
     survey="ext-dedup",
@@ -719,38 +688,29 @@ def _d6_cache_evict(key: tuple[str, str]) -> None:
 )
 def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cluster table is a deterministic artifact consumed by several
-    # downstream queries (d6b histogram, c8 split, c13 sampling) — cache
-    # the checkpointed result per (session, sf_dir) exactly like the
-    # trained IVF centroids, so one driver/bench session runs the
-    # iterative CC loop once, as a deployment would reuse one clustering
-    # artifact. The loop already localCheckpoints per round, so caching
-    # the final frame adds no new lineage semantics.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _D6_CACHE.get(key)
-    if entry is not None:
-        owner, cached = entry
-        if owner() is spark:
-            return cached
-        _d6_cache_evict(key)  # dead or different session: rebuild
-    t = Tables(spark, sf_dir)
-    pairs = d3_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = min_label_propagation(pairs)
-    # stitch the untouched majority back in: isolated docs are their own
-    # cluster. The converged label table is small — broadcast it.
-    out = t.documents.select("doc_id").join(
-        F.broadcast(labels), F.col("doc_id") == F.col("node"), "left"
-    ).select(
-        "doc_id",
-        F.coalesce("label", "doc_id").alias("cluster_id"),
-        F.when(F.coalesce("label", "doc_id") == F.col("doc_id"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("is_canonical"),
-    ).localCheckpoint(eager=True)
-    while len(_D6_CACHE) >= _D6_CACHE_MAX:
-        _d6_cache_evict(next(iter(_D6_CACHE)))
-    _D6_CACHE[key] = (weakref.ref(spark), out)
-    return out
+    # downstream queries (d6b histogram, c8 split, c13 sampling) — a
+    # session artifact (artifacts.py), so one driver/bench session runs
+    # the iterative CC loop once, as a deployment would reuse one
+    # clustering artifact. The loop already localCheckpoints per round,
+    # so checkpointing the final frame adds no new lineage semantics.
+    def build() -> DataFrame:
+        t = Tables(spark, sf_dir)
+        pairs = d3_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        labels = min_label_propagation(pairs)
+        # stitch the untouched majority back in: isolated docs are their
+        # own cluster. The converged label table is small — broadcast it.
+        return t.documents.select("doc_id").join(
+            F.broadcast(labels), F.col("doc_id") == F.col("node"), "left"
+        ).select(
+            "doc_id",
+            F.coalesce("label", "doc_id").alias("cluster_id"),
+            F.when(F.coalesce("label", "doc_id") == F.col("doc_id"), 1)
+            .otherwise(0)
+            .cast("int")
+            .alias("is_canonical"),
+        )
+
+    return artifact(spark, sf_dir, "d6", build)
 
 
 def _d6_oracle() -> str:

@@ -30,7 +30,7 @@ This row proves the refresh discipline end-to-end:
 - the sink is read back and compared to a TIME-VERSIONED DuckDB oracle:
   each event joins the dim generation active at its time slice, using
   the SAME all-integer slice arithmetic the source builder uses
-  (streaming_exec._write_time_sliced_source), so stream and oracle
+  (streaming_exec._sliced_source), so stream and oracle
   cannot drift on a boundary.
 
 The swap is keyed to the batch's event-time slice (min wire-ts over the
@@ -52,9 +52,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.operators.sink_readback import (
-    _artifact_dir,
-)
+from real_time_data_warehouse_spark.artifacts import artifact_dir
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
     _await,
@@ -174,7 +172,7 @@ def _j16_build(
             "mid-stream dim update"
         )
 
-    return _artifact_dir(spark, sf_dir, kind, build)
+    return artifact_dir(spark, sf_dir, kind, build)
 
 
 @register(

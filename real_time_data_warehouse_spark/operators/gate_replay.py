@@ -26,7 +26,6 @@ owns its data.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -66,12 +65,10 @@ def _replay_batches(
     for the SCD2 stream). Callers that already know the id range pass
     ``span`` so the max-id scalar job (a full input scan) is skipped —
     the time-split family derives it from the same aggregate that finds
-    the 0-base (guide §1.2: fewer passes). PRECONDITION on a caller-
-    supplied span: every row must satisfy ``id_col < span`` — batch
-    ranges are [lo, hi) with hi capped at span, so an under-estimated
-    span silently DROPS rows with id_col >= span from every batch
-    instead of failing. Current callers compute it exactly from
-    max(id_col)."""
+    the 0-base (guide §1.2: fewer passes). The first batch is open below
+    and the last open above, so a row outside ``[0, span)`` (a stale or
+    under-estimated span) still lands in a batch instead of being
+    silently dropped."""
     if span is None:
         max_id = rows.agg(F.max(id_col)).first()[0]
         # empty input: still drive the applier once with the empty
@@ -79,17 +76,18 @@ def _replay_batches(
         # (tests/test_empty_inputs.py) and write a correctly-schemaed
         # empty partition for the final read
         span = (int(max_id) if max_id is not None else 0) + 1
-    tmp = tempfile.mkdtemp(prefix="rtdw_gate_replay_")
-    store_dir = os.path.join(tmp, "store")
-    out_dir = os.path.join(tmp, "out")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="rtdw_gate_replay_", ignore_cleanup_errors=True
+    ) as tmp:
+        store_dir = os.path.join(tmp, "store")
+        out_dir = os.path.join(tmp, "out")
         for b in range(_N_BATCHES):
-            lo = span * b // _N_BATCHES
-            hi = span * (b + 1) // _N_BATCHES
-            batch = rows.where(
-                (F.col(id_col) >= lo) & (F.col(id_col) < hi)
-            )
-            apply_batch(spark, batch, b, store_dir, out_dir)
+            in_batch = F.lit(True)
+            if b > 0:
+                in_batch &= F.col(id_col) >= span * b // _N_BATCHES
+            if b < _N_BATCHES - 1:
+                in_batch &= F.col(id_col) < span * (b + 1) // _N_BATCHES
+            apply_batch(spark, rows.where(in_batch), b, store_dir, out_dir)
         if finalize is not None:
             out = finalize(spark, out_dir)
         else:
@@ -99,8 +97,6 @@ def _replay_batches(
         # materialize before the scratch dir is removed — the returned
         # frame must not depend on the replay's files
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -220,8 +216,9 @@ def a13s_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(tokenize("text")).alias("w")
     ).localCheckpoint(eager=True)
     span = int(tokens.agg(F.max("doc_id")).first()[0]) + 1
-    tmp = tempfile.mkdtemp(prefix="rtdw_hh_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="rtdw_hh_replay_", ignore_cleanup_errors=True
+    ) as tmp:
         for b in range(_N_BATCHES):
             lo, hi = span * b // _N_BATCHES, span * (b + 1) // _N_BATCHES
             batch = tokens.where(
@@ -231,8 +228,6 @@ def a13s_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = hh.final_candidates(spark, tmp, _N_BATCHES).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     tot = tokens.agg(F.count("*").cast("bigint").alias("n_total"))
     return (
         tokens.join(F.broadcast(cand), "w")

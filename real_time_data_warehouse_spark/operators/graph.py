@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from real_time_data_warehouse_spark.artifacts import artifact
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.tables import Tables
 
@@ -77,30 +78,15 @@ def transition_page_edges(events: DataFrame) -> DataFrame:
     )
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cached_transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The seed-INDEPENDENT half of g1/g1b: the transition edge list
-    (events scan + per-user window sort + pair groupBy) checkpointed
-    once per (session, sf_dir) and shared by both rank variants — g1
-    and g1b previously rebuilt identical edge artifacts per call, and
-    per bench run. A localCheckpoint handle stays valid for the life of
-    the session; the dict is keyed by applicationId so a new session
-    never sees another session's handle."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_CACHE.get(key)
-    if df is None:
-        # bounded cache: entries from other sessions/sf_dirs are dropped
-        # (dead applicationIds would otherwise pin checkpointed blocks
-        # and py4j handles for the life of the process)
-        while len(_EDGE_CACHE) >= 4:
-            _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))
-        df = transition_page_edges(
-            Tables(spark, sf_dir).events
-        ).localCheckpoint(eager=True)
-        _EDGE_CACHE[key] = df
-    return df
+    (events scan + per-user window sort + pair groupBy), checkpointed
+    once per (session, sf_dir) as a session artifact (artifacts.py) and
+    shared by both rank variants."""
+    return artifact(
+        spark, sf_dir, "g1_edges",
+        lambda: transition_page_edges(Tables(spark, sf_dir).events),
+    )
 
 
 def pagerank_frame(

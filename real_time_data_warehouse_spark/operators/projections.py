@@ -334,9 +334,7 @@ def p10_search_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p12_maxwell_envelope_parse(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from real_time_data_warehouse_spark.operators.sink_readback import (
-        _artifact_dir,
-    )
+    from real_time_data_warehouse_spark.artifacts import artifact_dir
     from real_time_data_warehouse_spark.sources.cdc import (
         maxwell_etl_filter,
         parse_maxwell,
@@ -359,7 +357,7 @@ def p12_maxwell_envelope_parse(
         )
         synthetic_cdc_json(orders).write.mode("overwrite").parquet(base)
 
-    topic = _artifact_dir(spark, sf_dir, "p12src", build)
+    topic = artifact_dir(spark, sf_dir, "p12src", build)
     raw = spark.read.schema("value string").parquet(topic)
     parsed = maxwell_etl_filter(parse_maxwell(raw))
     return parsed.groupBy("type").agg(

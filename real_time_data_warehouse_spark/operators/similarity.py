@@ -16,7 +16,6 @@ share a bucket key → shuffle on bucket, never the cross product).
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 import numpy as np
@@ -24,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.artifacts import artifact
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.tables import Tables
 
@@ -590,10 +590,6 @@ def _d5_oracle() -> str:
     oracle=None,  # attached below (generated from the shared hyperplanes)
 )
 def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators.frame_cache import (
-        cached_frame,
-    )
-
     def build() -> DataFrame:
         t = Tables(spark, sf_dir)
         emb = (
@@ -636,12 +632,11 @@ def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the verified near-dup PAIR TABLE is a deterministic artifact with
     # several consumers (the d5 row itself, d17b's recall audit, d20's
-    # decontamination chain) — cache it per (session, sf_dir) with the
-    # d6 discipline (operators/frame_cache.py) so one session runs the
-    # LSH band join + cosine verify once; the r9 sf1 probe measured
-    # d17b paying the full d5 rebuild (~200 s at 10x scale) per call
-    # without this.
-    return cached_frame(spark, sf_dir, "d5_pairs", build)
+    # decontamination chain) — a session artifact (artifacts.py), so one
+    # session runs the LSH band join + cosine verify once; the r9 sf1
+    # probe measured d17b paying the full d5 rebuild (~200 s at 10x
+    # scale) per call without this.
+    return artifact(spark, sf_dir, "d5_pairs", build)
 
 
 _QR["d5_embedding_neardup"] = _dc.replace(
@@ -849,19 +844,17 @@ def _train_ivf_centroids(emb: DataFrame) -> list[tuple[int, list[float]]]:
 
 
 # Trained centroids are a pure function of the embeddings table, and the
-# training loop is driver-coordinated (5 rounds x 2 jobs) — cache per
-# sf_dir so the queries that share the quantizer (s3 search, s4 cluster
-# stats) train once per process, exactly as a deployment would reuse one
-# trained quantizer artifact. Determinism makes the cache semantics-free.
-_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
-
-
+# training loop is driver-coordinated (5 rounds x 2 jobs) — a session
+# artifact, so the queries that share the quantizer (s3 search, s4
+# cluster stats) train once, exactly as a deployment would reuse one
+# trained quantizer artifact. Determinism makes the store semantics-free.
 def _trained_centroids(
     sf_dir: str, emb: DataFrame
 ) -> list[tuple[int, list[float]]]:
-    if sf_dir not in _CENTROID_CACHE:
-        _CENTROID_CACHE[sf_dir] = _train_ivf_centroids(emb)
-    return _CENTROID_CACHE[sf_dir]
+    return artifact(
+        emb.sparkSession, sf_dir, "ivf_centroids",
+        lambda: _train_ivf_centroids(emb),
+    )
 
 
 @register(
@@ -1215,15 +1208,13 @@ def _pq_encode_udf(books: list[list[tuple[int, list[float]]]]):
     return encode
 
 
-_PQ_BOOK_CACHE: dict[str, list[list[tuple[int, list[float]]]]] = {}
-
-
 def _trained_codebooks(
     sf_dir: str, emb: DataFrame
 ) -> list[list[tuple[int, list[float]]]]:
-    if sf_dir not in _PQ_BOOK_CACHE:
-        _PQ_BOOK_CACHE[sf_dir] = _train_pq_codebooks(emb)
-    return _PQ_BOOK_CACHE[sf_dir]
+    return artifact(
+        emb.sparkSession, sf_dir, "pq_books",
+        lambda: _train_pq_codebooks(emb),
+    )
 
 
 def _pq_oracle() -> str:
@@ -2268,8 +2259,9 @@ def _sq8_matmul_scorer(qids: "np.ndarray", Q: "np.ndarray", k: int):
     batch's k-th-largest score per anchor are outranked by >= k
     strictly better rows, so dropping them cannot evict a global
     top-k member. All dots are integer-valued doubles < 2^53 — exact
-    under any summation order. Self-pairs are masked below every real
-    score so they can never be emitted."""
+    under any summation order. Self-pairs are masked to -inf and
+    non-finite scores are never emitted, so a batch of <= k rows (where
+    the threshold itself is -inf) cannot leak a self-pair."""
 
     def score_batches(it):
         for pdf in it:
@@ -2285,7 +2277,7 @@ def _sq8_matmul_scorer(qids: "np.ndarray", Q: "np.ndarray", k: int):
                 thresh = np.partition(S, -k, axis=1)[:, -k]
             else:
                 thresh = np.full(S.shape[0], -np.inf)
-            qi, ni = np.nonzero(S >= thresh[:, None])
+            qi, ni = np.nonzero(np.isfinite(S) & (S >= thresh[:, None]))
             yield pd.DataFrame(
                 {
                     "qid": qids[qi],
@@ -2336,9 +2328,12 @@ def sq8_fullscan_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = codes.where(
         F.col("vec_id") % _KNN_SAMPLE_MOD == 0
     ).withColumn("blk", blk)
-    tmp = tempfile.mkdtemp(prefix="rtdw_s10c_anchors_")
     parts: list[DataFrame] = []
-    try:
+    # only driver-side collects read the scratch dir; the returned plan
+    # depends on `codes` and the per-block closures alone
+    with tempfile.TemporaryDirectory(
+        prefix="rtdw_s10c_anchors_", ignore_cleanup_errors=True
+    ) as tmp:
         anchors.write.mode("overwrite").parquet(tmp)
         adf = spark.read.schema(
             "vec_id long, qc array<bigint>, blk long"
@@ -2356,10 +2351,6 @@ def sq8_fullscan_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "qid long, nid long, sim long",
                 )
             )
-    finally:
-        # only driver-side collects read the scratch dir; the returned
-        # plan depends on `codes` and the per-block closures alone
-        shutil.rmtree(tmp, ignore_errors=True)
     if not parts:
         return spark.createDataFrame([], "qid long, nid long")
     scored = parts[0]

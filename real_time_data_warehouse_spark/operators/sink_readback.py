@@ -19,72 +19,22 @@ producer — same plan above the sink); k2's read-back predicate prunes
 on the partition column, so the serving query touches one partition
 dir per requested day exactly like Doris ``partition par#{date}``
 (pruning is asserted in tests/test_sink_readback.py). Artifacts are
-cached per (applicationId, sf_dir) with the j12 eviction discipline.
+built once per (applicationId, sf_dir) through the session artifact
+store (``artifacts.py``).
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.artifacts import artifact_dir
 from real_time_data_warehouse_spark.functions.money import oracle_dec_sum
 from real_time_data_warehouse_spark.operators.serving import SERVING_DATE
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.tables import Tables
-
-_CACHE: dict[tuple[str, str, str], str] = {}  # (app, sf_dir, kind) → dir
-# MUST stay above the number of artifact kinds one full bench/sweep
-# touches (k1-k6, st14-18, j13/j14, x1s/x2s, d7x/d9x, w12, the three
-# sliced sources, d6/d23/s15s, ...) or interleaved reps evict every
-# artifact before its next read and the whole run silently degrades to
-# cold rebuilds (round-9 session 2: extended_total 145 s → 271 s the
-# moment kinds crossed 16). Each artifact is MBs at bench scale, so
-# the disk cost of headroom is trivial next to a single rebuild.
-_CACHE_MAX = 64  # round 12: kinds reached ~43 (j16/j16b/app7x/k2b new)
-_ATEXIT_ARMED = False
-
-
-def _evict(key: tuple[str, str, str]) -> None:
-    d = _CACHE.pop(key, None)
-    if d is not None:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _cleanup_all() -> None:
-    for key in list(_CACHE):
-        _evict(key)
-
-
-def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
-    """Session-cached sink artifact: build(path) writes it once; stale
-    or over-capacity entries are reclaimed (the j12 discipline)."""
-    global _ATEXIT_ARMED
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    cached = _CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        # LRU touch (dicts iterate in insert order; eviction pops the
-        # front): a hit must move the entry to the back, or a full
-        # rotation of OTHER builds evicts the hottest artifact first
-        del _CACHE[key]
-        _CACHE[key] = cached
-        return cached
-    _evict(key)
-    while len(_CACHE) >= _CACHE_MAX:
-        _evict(next(iter(_CACHE)))
-    if not _ATEXIT_ARMED:
-        atexit.register(_cleanup_all)
-        _ATEXIT_ARMED = True
-    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = tempfile.mkdtemp(prefix=f"rtdw_{kind}_{sfx}_")
-    build(base)
-    _CACHE[key] = base
-    return base
 
 
 # --- k1: per-row-topic routed sink, read back (S5) -------------------------
@@ -112,7 +62,7 @@ def _k1_build(spark: SparkSession, sf_dir: str) -> str:
             "overwrite"
         ).partitionBy("topic").parquet(base)
 
-    return _artifact_dir(spark, sf_dir, "k1", build)
+    return artifact_dir(spark, sf_dir, "k1", build)
 
 
 @register(
@@ -192,7 +142,7 @@ def _k2_build(spark: SparkSession, sf_dir: str) -> str:
             serving.repartition(F.col("cur_date")), base
         )
 
-    return _artifact_dir(spark, sf_dir, "k2", build)
+    return artifact_dir(spark, sf_dir, "k2", build)
 
 
 @register(
@@ -312,7 +262,7 @@ def _k3_build(spark: SparkSession, sf_dir: str) -> str:
             "overwrite"
         ).partitionBy("topic").parquet(base)
 
-    return _artifact_dir(spark, sf_dir, "k3", build)
+    return artifact_dir(spark, sf_dir, "k3", build)
 
 
 @register(
@@ -395,7 +345,7 @@ def _k4_build(spark: SparkSession, sf_dir: str) -> str:
                 type_col="type",
             )
 
-    return _artifact_dir(spark, sf_dir, "k4", build)
+    return artifact_dir(spark, sf_dir, "k4", build)
 
 
 @register(
@@ -502,7 +452,7 @@ def _k5_build(spark: SparkSession, sf_dir: str) -> str:
             )
             apply_config_ddl(spark, batch, catalog, order_col="ver")
 
-    return _artifact_dir(spark, sf_dir, "k5", build)
+    return artifact_dir(spark, sf_dir, "k5", build)
 
 
 @register(
@@ -587,7 +537,7 @@ def _k6_build(spark: SparkSession, sf_dir: str) -> str:
             .save()
         )
 
-    return _artifact_dir(spark, sf_dir, "k6", build)
+    return artifact_dir(spark, sf_dir, "k6", build)
 
 
 @register(

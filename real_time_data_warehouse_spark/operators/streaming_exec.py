@@ -22,8 +22,8 @@ read-back and the oracle restrict to ``edt ≤ max(ts) − 20 s`` — one
 full window inside the guaranteed-emitted region, computable exactly by
 both engines.
 
-The stream runs ONCE per (session, sf_dir) into a cached artifact
-(j12 discipline); re-runs resume from the checkpoint, find no new
+The stream runs ONCE per (session, sf_dir) into a session artifact
+(``artifacts.py``); re-runs resume from the checkpoint, find no new
 files, and the read-back serves the medians — exactly how a deployment
 reads a continuously-maintained DWS table rather than recomputing it.
 """
@@ -32,17 +32,15 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+import time
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.artifacts import artifact_dir
 from real_time_data_warehouse_spark.functions.money import oracle_dec_sum
 from real_time_data_warehouse_spark.functions.time import oracle_tumble
-from real_time_data_warehouse_spark.operators.sink_readback import (
-    _artifact_dir,
-)
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.tables import Tables
 
@@ -95,48 +93,32 @@ def _events_wire(ev: DataFrame) -> DataFrame:
     )
 
 
-def _write_time_sliced_source(
-    spark: SparkSession, sf_dir: str, src: str, n_files: int
+def _write_slices(
+    rows: DataFrame, slice_id: str, n_files: int, base: str
 ) -> None:
-    """events → ``n_files`` single-file parquet slices of ascending,
-    non-overlapping event-time ranges (one file per micro-batch under
-    maxFilesPerTrigger=1). Time-ordered batches are what make the
-    watermark genuinely ADVANCE between micro-batches — the property
-    every real-streaming driver row here exists to exercise.
+    """``rows`` → ``n_files`` single-file parquet slices in ``base``,
+    file ``batch_<b>.parquet`` holding the rows whose ``slice_id`` SQL
+    expression is b (one file per micro-batch under
+    maxFilesPerTrigger=1). Callers slice into ascending, non-overlapping
+    ranges — the ordering contract every real-streaming row here needs.
 
     One write job for all slices: hash-repartition on the slice id puts
     each slice in exactly one task, so partitionBy emits ONE file per
     slice dir (the k1 one-writer-per-topic discipline); the files are
-    then moved into ``src`` in slice order, which fixes the mtime order
-    the file source follows."""
-    ev = Tables(spark, sf_dir).events
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
-    span = (hi - lo) + 1
-    # all-integer slice id (wire ts is ns): exact µs via `div`, then
-    # floor((us - lo) * n / span) — no doubles anywhere near a boundary
-    sliced = _events_wire(ev).withColumn(
-        "b",
-        F.expr(
-            f"CAST(least({n_files - 1}, "
-            f"(ts div 1000 - {lo}L) * {n_files} div {span}L) AS INT)"
-        ),
-    )
-    stage = tempfile.mkdtemp(prefix="rtdw_slice_stage_")
-    sliced.repartition(n_files, "b").write.mode("overwrite").partitionBy(
-        "b"
-    ).parquet(stage)
-    os.makedirs(src, exist_ok=True)
-    import time as _time
-
-    now = _time.time()
+    then moved into ``base`` in slice order. The staging dir sits under
+    ``base/_stage`` (the file source skips ``_``-prefixed paths) and is
+    removed afterwards."""
+    stage = os.path.join(base, "_stage")
+    rows.withColumn("b", F.expr(slice_id)).repartition(
+        n_files, "b"
+    ).write.mode("overwrite").partitionBy("b").parquet(stage)
+    now = time.time()
     for b in range(n_files):
         bdir = os.path.join(stage, f"b={b}")
         if not os.path.isdir(bdir):
-            continue  # empty time slice (gappy data): fewer micro-batches
+            continue  # empty slice (gappy data): fewer micro-batches
         part = next(p for p in os.listdir(bdir) if p.endswith(".parquet"))
-        dst = os.path.join(src, f"batch_{b}.parquet")
+        dst = os.path.join(base, f"batch_{b}.parquet")
         shutil.move(os.path.join(bdir, part), dst)
         # PIN the mtimes one second apart in slice order: the one-job
         # write moves all files within the same millisecond, and the
@@ -148,13 +130,28 @@ def _write_time_sliced_source(
 
 
 def _sliced_source(spark: SparkSession, sf_dir: str, n_files: int) -> str:
-    """Session-cached shared slice artifact: the four real-streaming
-    rows all stream the same events table, so the sliced source is
-    built once per (session, sf_dir) and shared read-only."""
+    """Session-cached shared slice artifact: events in ``n_files``
+    ascending event-time slices. Time-ordered batches are what make the
+    watermark genuinely ADVANCE between micro-batches; the real-streaming
+    rows all stream the same events table, so the sliced source is built
+    once per (session, sf_dir) and shared read-only."""
     def build(base: str) -> None:
-        _write_time_sliced_source(spark, sf_dir, base, n_files)
+        ev = Tables(spark, sf_dir).events
+        lo, hi = ev.agg(
+            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+        ).first()
+        span = (hi - lo) + 1
+        # all-integer slice id (wire ts is ns): exact µs via `div`, then
+        # floor((us - lo) * n / span) — no doubles near a boundary
+        _write_slices(
+            _events_wire(ev),
+            f"CAST(least({n_files - 1}, "
+            f"(ts div 1000 - {lo}L) * {n_files} div {span}L) AS INT)",
+            n_files,
+            base,
+        )
 
-    return _artifact_dir(spark, sf_dir, f"evsrc{n_files}", build)
+    return artifact_dir(spark, sf_dir, f"evsrc{n_files}", build)
 
 
 def _st14_build(spark: SparkSession, sf_dir: str) -> str:
@@ -170,7 +167,7 @@ def _st14_build(spark: SparkSession, sf_dir: str) -> str:
             q = run_dws_agg_stream(spark, src, out, ckpt)
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "st14", build)
+    return artifact_dir(spark, sf_dir, "st14", build)
 
 
 @register(
@@ -268,7 +265,7 @@ def _st15_build(spark: SparkSession, sf_dir: str) -> str:
             )
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "st15", build)
+    return artifact_dir(spark, sf_dir, "st15", build)
 
 
 @register(
@@ -379,7 +376,7 @@ def _st16_build(spark: SparkSession, sf_dir: str) -> str:
                 f.write(_json.dumps(r) + "\n")
         assert_watermark_eviction(records, min_batches=2)
 
-    return _artifact_dir(spark, sf_dir, "st16", build)
+    return artifact_dir(spark, sf_dir, "st16", build)
 
 
 @register(
@@ -461,7 +458,7 @@ def _j13_build(spark: SparkSession, sf_dir: str) -> str:
                 f.write(json.dumps(r) + "\n")
         assert_watermark_eviction(records, min_batches=2)
 
-    return _artifact_dir(spark, sf_dir, "j13", build)
+    return artifact_dir(spark, sf_dir, "j13", build)
 
 
 @register(
@@ -550,7 +547,7 @@ def _st17_build(spark: SparkSession, sf_dir: str) -> str:
             )
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "st17", build)
+    return artifact_dir(spark, sf_dir, "st17", build)
 
 
 @register(
@@ -638,7 +635,7 @@ def _j14_build(spark: SparkSession, sf_dir: str) -> str:
                 f.write(json.dumps(r) + "\n")
         assert_watermark_eviction(records, min_batches=2)
 
-    return _artifact_dir(spark, sf_dir, "j14", build)
+    return artifact_dir(spark, sf_dir, "j14", build)
 
 
 @register(
@@ -736,7 +733,7 @@ def _st18_build(spark: SparkSession, sf_dir: str) -> str:
             q = run_dws_agg_update_stream(spark, src, serving, ckpt)
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "st18", build)
+    return artifact_dir(spark, sf_dir, "st18", build)
 
 
 @register(
@@ -885,7 +882,7 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
 
-    return _artifact_dir(spark, sf_dir, "x1s", build)
+    return artifact_dir(spark, sf_dir, "x1s", build)
 
 
 @register(
@@ -989,7 +986,7 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
 
-    return _artifact_dir(spark, sf_dir, "x2s", build)
+    return artifact_dir(spark, sf_dir, "x2s", build)
 
 
 @register(
@@ -1046,39 +1043,19 @@ _D7X_FILES = _SRC_FILES
 
 
 def _write_id_sliced(rows: DataFrame, base: str, id_col: str) -> None:
-    """``rows`` → ``_D7X_FILES`` single-file parquet slices of ascending,
-    non-overlapping ``id_col`` ranges (one file per micro-batch under
-    maxFilesPerTrigger=1), mtimes pinned in slice order. Ascending-id
-    batches are the gates' ordering contract (arrival order IS dedup
-    precedence) — the same slicing _replay_batches uses, now as files the
-    real file source schedules."""
+    """``rows`` → ``_D7X_FILES`` slices of ascending, non-overlapping
+    ``id_col`` ranges. Ascending-id batches are the gates' ordering
+    contract (arrival order IS dedup precedence) — the same slicing
+    _replay_batches uses, now as files the real file source schedules."""
     max_id = rows.agg(F.max(id_col)).first()[0]
     span = (int(max_id) if max_id is not None else 0) + 1
-    sliced = rows.withColumn(
-        "b",
-        F.expr(
-            f"CAST(least({_D7X_FILES - 1}, "
-            f"{id_col} * {_D7X_FILES} div {span}L) AS INT)"
-        ),
+    _write_slices(
+        rows,
+        f"CAST(least({_D7X_FILES - 1}, "
+        f"{id_col} * {_D7X_FILES} div {span}L) AS INT)",
+        _D7X_FILES,
+        base,
     )
-    stage = tempfile.mkdtemp(prefix="rtdw_idslice_stage_")
-    sliced.repartition(_D7X_FILES, "b").write.mode(
-        "overwrite"
-    ).partitionBy("b").parquet(stage)
-    import time as _time
-
-    now = _time.time()
-    for b in range(_D7X_FILES):
-        bdir = os.path.join(stage, f"b={b}")
-        if not os.path.isdir(bdir):
-            continue
-        part = next(p for p in os.listdir(bdir) if p.endswith(".parquet"))
-        dst = os.path.join(base, f"batch_{b}.parquet")
-        shutil.move(os.path.join(bdir, part), dst)
-        # pin mtimes one second apart: same-ms moves make the file
-        # source's mtime ordering a listing coin flip (st15 lesson)
-        os.utime(dst, (now - _D7X_FILES + b, now - _D7X_FILES + b))
-    shutil.rmtree(stage, ignore_errors=True)
 
 
 def _doc_sliced_source(spark: SparkSession, sf_dir: str) -> str:
@@ -1086,7 +1063,7 @@ def _doc_sliced_source(spark: SparkSession, sf_dir: str) -> str:
         docs = Tables(spark, sf_dir).documents.select("doc_id", "text")
         _write_id_sliced(docs, base, "doc_id")
 
-    return _artifact_dir(spark, sf_dir, f"docsrc{_D7X_FILES}", build)
+    return artifact_dir(spark, sf_dir, f"docsrc{_D7X_FILES}", build)
 
 
 def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
@@ -1146,7 +1123,7 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
 
-    return _artifact_dir(spark, sf_dir, "d7x", build)
+    return artifact_dir(spark, sf_dir, "d7x", build)
 
 
 @register(
@@ -1197,7 +1174,7 @@ def _vec_sliced_source(spark: SparkSession, sf_dir: str) -> str:
         )
         _write_id_sliced(vecs, base, "vec_id")
 
-    return _artifact_dir(spark, sf_dir, f"vecsrc{_D7X_FILES}", build)
+    return artifact_dir(spark, sf_dir, f"vecsrc{_D7X_FILES}", build)
 
 
 def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
@@ -1254,7 +1231,7 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
 
-    return _artifact_dir(spark, sf_dir, "d9x", build)
+    return artifact_dir(spark, sf_dir, "d9x", build)
 
 
 @register(
@@ -1339,7 +1316,7 @@ def _w12_build(spark: SparkSession, sf_dir: str) -> str:
             )
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "w12", build)
+    return artifact_dir(spark, sf_dir, "w12", build)
 
 
 @register(
@@ -1466,7 +1443,7 @@ def _j15_build(spark: SparkSession, sf_dir: str) -> str:
             )
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "j15", build)
+    return artifact_dir(spark, sf_dir, "j15", build)
 
 
 @register(
@@ -1566,7 +1543,7 @@ def _w13_build(spark: SparkSession, sf_dir: str) -> str:
             )
             _await(q)
 
-    return _artifact_dir(spark, sf_dir, "w13", build)
+    return artifact_dir(spark, sf_dir, "w13", build)
 
 
 _W13_K = _W13_SIZE_S // _W13_SLIDE_S  # overlapping windows per event

@@ -374,46 +374,47 @@ def test_label_propagation_long_chain_within_default_bound(spark):
     assert got == {i: 0 for i in range(1000)}
 
 
-def test_d6_cache_hit_eviction_and_dead_session_guard(spark):
-    """The d6 artifact cache must (a) return the same checkpointed
-    frame on a same-session hit, (b) unpersist evicted entries'
-    checkpoint blocks instead of leaking them, and (c) treat an entry
-    whose owning session is gone (weakref dead / different object) as
-    a miss — the id()-reuse hazard a raw id(spark) key had."""
-    from real_time_data_warehouse_spark.operators import dedup
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
+def test_replay_batches_keep_rows_outside_a_short_span(spark):
+    """A caller-supplied span below the max id (or ids below 0) must
+    not drop rows: the first replay batch is open below, the last open
+    above, so every row lands in exactly one batch."""
+    import os
 
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    dedup._D6_CACHE.pop(key, None)
-    df1 = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, SF_DIR)
-    assert key in dedup._D6_CACHE
-    df2 = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, SF_DIR)
-    assert df2 is df1  # same-session hit
+    from real_time_data_warehouse_spark.operators.gate_replay import (
+        _replay_batches,
+    )
 
-    # (b) eviction releases the checkpoint's storage blocks (the
-    # persisted RDD is the LogicalRDD's, not the per-call toRdd wrapper)
-    rdd_id = df1._jdf.queryExecution().analyzed().rdd().id()
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().contains(rdd_id)
-    dedup._d6_cache_evict(key)
-    assert key not in dedup._D6_CACHE
-    assert not jsc.getPersistentRDDs().contains(rdd_id)
+    rows = spark.range(-3, 20).withColumnRenamed("id", "k")
 
-    # (c) a dead/foreign owner is a miss, evicted on probe, and the
-    # query transparently rebuilds
-    class _Ghost:
-        pass
+    def apply(spark, batch, b, store_dir, out_dir):
+        batch.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={b}")
+        )
 
-    import weakref as _wr
+    out = _replay_batches(spark, rows, "k", apply, span=8)
+    assert sorted(r["k"] for r in out.collect()) == list(range(-3, 20))
 
-    ghost = _Ghost()
-    df3 = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, SF_DIR)
-    dedup._D6_CACHE[key] = (_wr.ref(ghost), df3)
-    del ghost  # ref now dead
-    df4 = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, SF_DIR)
-    assert df4 is not df3
-    owner, cached = dedup._D6_CACHE[key]
-    assert owner() is spark and cached is df4
+
+def test_sq8_matmul_scorer_corpus_smaller_than_k_emits_no_self_pairs():
+    """With <= k corpus rows per batch the prune threshold is -inf, so
+    the masked (-inf) self-pairs must be dropped explicitly — never
+    emitted, never cast to int64."""
+    import numpy as np
+    import pandas as pd
+
+    from real_time_data_warehouse_spark.operators.similarity import (
+        _sq8_matmul_scorer,
+    )
+
+    qids = np.array([1, 2], dtype=np.int64)
+    Q = np.array([[1, 2, 3], [3, 2, 1]], dtype=np.float64)
+    corpus = pd.DataFrame(
+        {"vec_id": [1, 2, 3], "qc": [[1, 2, 3], [3, 2, 1], [1, 1, 1]]}
+    )
+    out = pd.concat(_sq8_matmul_scorer(qids, Q, k=10)([corpus]))
+    got = {(q, n): s for q, n, s in out.itertuples(index=False)}
+    # every non-self pair survives with its exact integer dot
+    assert got == {(1, 2): 10, (1, 3): 6, (2, 1): 10, (2, 3): 6}
 
 
 def test_chunking_covers_every_token_with_overlap(spark):

@@ -79,13 +79,12 @@ ROWS: list[tuple[str, tuple[str, ...]]] = [
 
 
 def _max_state_rows(spark, sf_dir: str, kind: str) -> int | None:
-    from real_time_data_warehouse_spark.operators import sink_readback as sr
+    from real_time_data_warehouse_spark import artifacts
 
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    base = sr._CACHE.get(key)
-    if not base:
+    entry = artifacts._STORE.get(artifacts.key(spark, sf_dir, kind))
+    if entry is None:
         return None
-    path = os.path.join(base, "progress.jsonl")
+    path = os.path.join(entry.value, "progress.jsonl")
     if not os.path.exists(path):
         return None
     mx = 0
@@ -103,11 +102,10 @@ def _max_state_rows(spark, sf_dir: str, kind: str) -> int | None:
 
 
 def _evict_kinds(spark, sf_dir: str, kinds: tuple[str, ...]) -> None:
-    from real_time_data_warehouse_spark.operators import sink_readback as sr
+    from real_time_data_warehouse_spark import artifacts
 
-    app = spark.sparkContext.applicationId
     for kind in kinds:
-        sr._evict((app, sf_dir, kind))
+        artifacts.evict(artifacts.key(spark, sf_dir, kind))
 
 
 def main() -> int:
